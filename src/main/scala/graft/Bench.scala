@@ -120,8 +120,12 @@ object Bench {
     val qsCold = jsonMap(_._2._2)
     val qsWarm = jsonMap(_._2._3)
     val total = results.map(_._2._1).filter(_ >= 0).sum
+    val failed = results.filter(_._2._1 < 0).map(_._1)
+    // failed slots are left out of `total`; `failed_count` keeps the
+    // file artifact from reading as healthy (bench_guard refuses it)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s"""{"metric":"total","value":$total,"unit":"sec",""" +
+        s""""failed_count":${failed.size},"queries":$qs,""" +
         s""""queries_median_cold":$qsCold,"queries_median_warm":$qsWarm,""" +
         s""""sf":"$sfDir","protocol":"min-of-pass-medians(2x3)",""" +
         s""""load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
@@ -149,7 +153,6 @@ object Bench {
         // well under the driver's 2000-char tail window
         if (len + e.length > 1300) (acc, len) else (e :: acc, len + e.length + 1)
       }._1.reverse
-    val failed = results.filter(_._2._1 < 0).map(_._1)
     val compact =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec",""" +
         s""""queries":${top.mkString("{", ",", "}")},""" +

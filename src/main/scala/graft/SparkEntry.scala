@@ -208,7 +208,8 @@ object SparkEntry {
     "pack_sequences" -> (Curation.packSequencesQuery _),
     "pack_doc_aware" -> ((s: SparkSession, d: String) =>
       Curation.packDocAwareQuery(s, d)),
-    "mix_sample" -> (Curation.mixSampleQuery _),
+    "mix_sample" -> ((s: SparkSession, d: String) =>
+      Curation.mixSampleQuery(s, d)),
     "mix_epochs" -> (Curation.mixEpochsQuery _),
     "split_assign" -> (Curation.splitAssignQuery _),
     "lm_buckets" -> ((s: SparkSession, d: String) =>
@@ -275,15 +276,19 @@ object SparkEntry {
     "tokenizer_profile" -> ((s: SparkSession, d: String) =>
       TextAnalysis.tokenizerProfile(s, d)),
     "pack_bpe" -> ((s: SparkSession, d: String) =>
-      Curation.packSequencesBpe(s, d)),
+      Curation.packSequences(Tables.documents(s, d),
+        denomination = Denomination.bpe(s, d))),
     "pack_unigram" -> ((s: SparkSession, d: String) =>
-      Curation.packSequencesUnigram(s, d)),
+      Curation.packSequences(Tables.documents(s, d),
+        denomination = Denomination.unigram(s, d))),
     "mix_sample_bpe" -> ((s: SparkSession, d: String) =>
-      Curation.mixSampleBpeQuery(s, d)),
+      Curation.mixSampleQuery(s, d, Denomination.bpe(s, d))),
     "budget_select_bpe" -> ((s: SparkSession, d: String) =>
-      Curation.budgetSelectBpe(s, d)),
+      Curation.budgetSelect(Tables.documents(s, d),
+        denomination = Denomination.bpe(s, d))),
     "domain_cap_bpe" -> ((s: SparkSession, d: String) =>
-      Curation.domainCapBpe(s, d)),
+      Curation.domainCapBudget(Tables.documents(s, d),
+        denomination = Denomination.bpe(s, d))),
     "embed_cluster_lloyd" -> ((s: SparkSession, d: String) =>
       Similarity.embedClusterLloyd(s, d)),
     "ann_rerank" -> ((s: SparkSession, d: String) =>
@@ -341,11 +346,13 @@ object SparkEntry {
     "cluster_sample_frontier" -> ((s: SparkSession, d: String) =>
       Curation.clusterSample(s, d, mode = "frontier")),
     "mix_sample_unigram" -> ((s: SparkSession, d: String) =>
-      Curation.mixSampleUnigramQuery(s, d)),
+      Curation.mixSampleQuery(s, d, Denomination.unigram(s, d))),
     "budget_select_unigram" -> ((s: SparkSession, d: String) =>
-      Curation.budgetSelectUnigram(s, d)),
+      Curation.budgetSelect(Tables.documents(s, d),
+        denomination = Denomination.unigram(s, d))),
     "domain_cap_unigram" -> ((s: SparkSession, d: String) =>
-      Curation.domainCapUnigram(s, d)),
+      Curation.domainCapBudget(Tables.documents(s, d),
+        denomination = Denomination.unigram(s, d))),
     "gopher_rules" -> ((s: SparkSession, d: String) =>
       Curation.gopherRulesQuery(s, d)),
     "repetition_rules" -> ((s: SparkSession, d: String) =>

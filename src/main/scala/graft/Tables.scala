@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.explain("formatted")`: `ReadSchema` / `PushedFilters`).
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Row count of a parquet path, computed once per (path, mtime) per
     * JVM and cached. A filterless parquet `count()` is answered from
     * row-group metadata (no column data is decoded), so the first call

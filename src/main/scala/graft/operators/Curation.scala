@@ -1203,15 +1203,18 @@ object Curation {
     * so Spark plans a single-partition sort — one task swallows the
     * corpus. [[Scale.stratifiedPrefixSum]] (with one constant stratum)
     * is the standard two-pass prefix sum instead; result is identical
-    * to the naive window at any bucket count and any partitioning. */
+    * to the naive window at any bucket count and any partitioning.
+    *
+    * `denomination` picks the unit (C49/C49b: BPE or unigram pieces,
+    * the unit a training run consumes — see [[Denomination]]); the
+    * iterative tokenizer train is per-vocab work cached per corpus
+    * version, so a piece packer costs one corpus scan + one vocab
+    * join + C13's exchange budget. */
   def packSequences(docs: DataFrame, seqLen: Int = 2048,
-      buckets: Int = 1024): DataFrame =
-    // pinned narrow counts (the mixSamplePieceCounts rule): the prefix
-    // kernel's subtotal and output passes otherwise re-tokenize
-    packFromCounts(docs.select(col("doc_id"),
-      size(TextAnalysis.tokens()).cast("long").as("n_tokens"))
-      .localCheckpoint(true),
-      seqLen, keep = Nil, buckets = buckets)
+      buckets: Int = 1024,
+      denomination: Denomination = Denomination.Words): DataFrame =
+    packSequencesFromCounts(Denomination.packCounts(docs, denomination),
+      seqLen, buckets)
 
   /** The packing kernel over a precomputed (doc_id, n_tokens[, keep…])
     * frame — ONE definition shared by [[packSequences]] and
@@ -1232,80 +1235,13 @@ object Curation {
     packSequences(Tables.documents(spark, sfDir))
 
   /** The packing kernel over ANY precomputed (doc_id, n_tokens) frame —
-    * the public seam the C49 BPE packer and custom cost models (chars,
-    * bytes, billed tokens) plug into. Same kernel as [[packSequences]],
-    * so every count source packs with identical semantics. */
+    * the public seam custom cost models (chars, bytes, billed tokens)
+    * plug into. Same kernel as [[packSequences]], so every count source
+    * packs with identical semantics. */
   def packSequencesFromCounts(counts: DataFrame, seqLen: Int = 2048,
       buckets: Int = 1024): DataFrame =
     packFromCounts(counts.select(col("doc_id"), col("n_tokens")),
       seqLen, keep = Nil, buckets = buckets)
-
-  // ------------------------------------------------------------- C49
-  /** BPE-PIECE sequence packing — C13's packer budgeting in the unit a
-    * training run actually consumes: per-doc piece counts under the
-    * LEARNED tokenizer (E27's pieces = Σ tf·|syms| join), not
-    * whitespace words. The divergence is systematic, not noise:
-    * whitespace counting under-budgets exactly the docs a subword
-    * tokenizer fragments most (rare/long/OOV-heavy words → several
-    * pieces each), so a whitespace-budgeted corpus overflows its
-    * context windows in production by each doc's (pieces_per_token −
-    * 1) factor. Composition: E27's one-scan-one-join piece counts →
-    * the C13 two-pass prefix-sum kernel — the iterative part (BPE
-    * train) is per-VOCAB work cached per corpus version, so at 100 TB
-    * this packs with one corpus scan + one vocab join + the same
-    * exchange budget as C13. Rows-only: the learned merge list is the
-    * train loop's output — not SQL-expressible (E26's reason, verbatim);
-    * the spec pins hand-computed piece packing and the
-    * whitespace-vs-piece divergence on a planted OOV doc. */
-  def packSequencesBpe(spark: SparkSession, sfDir: String,
-      seqLen: Int = 2048, nMerges: Int = 30,
-      buckets: Int = 1024): DataFrame =
-    // NOT pinned (measured r17, the shingleFrame revert class): the
-    // E27 frame ends in a global orderBy that EliminateSorts removes
-    // under the kernel's aggregates when LAZY, but a pin would
-    // materialize it — pack_bpe 0.65 -> 1.03 s with the pin; the three
-    // kernel passes over the piece subtree are cheaper than one range
-    // exchange + sort. (The mix/cap pins keep winning because they sit
-    // above a JOIN, where the sort is eliminated before the pin.)
-    packSequencesFromCounts(
-      TextAnalysis.bpeApply(spark, sfDir, nMerges)
-        .select(col("doc_id"), col("bpe_pieces").as("n_tokens")),
-      seqLen, buckets)
-
-  /** C49 over arbitrary docs + a symbolized vocab (term, syms) — the
-    * spec entry: a hand-built vocab makes piece counts hand-checkable. */
-  def packSequencesBpeOf(docs: DataFrame, vocab: DataFrame,
-      seqLen: Int = 2048, buckets: Int = 1024): DataFrame =
-    packSequencesFromCounts(
-      TextAnalysis.bpeApplyOf(docs, vocab)
-        .select(col("doc_id"), col("bpe_pieces").as("n_tokens")),
-      seqLen, buckets)
-
-  // ------------------------------------------------------------- C49b
-  /** UNIGRAM-PIECE sequence packing — C49 with the tokenizer swapped:
-    * E32b's fitted unigram-LM piece counts through the SAME
-    * [[packSequencesFromCounts]] kernel. Exists as the executable
-    * proof of the seam claim (E32b emits E27's schema precisely so
-    * every piece consumer swaps tokenizers unchanged) — and because a
-    * lab that picks unigram in the E33 bake-off needs its packer the
-    * same day. Rows-only (the fitted table is EM output — E26's
-    * reason); the spec pins packing under a hand-fitted table against
-    * C13's whitespace layout. */
-  def packSequencesUnigram(spark: SparkSession, sfDir: String,
-      seqLen: Int = 2048, vocabSize: Int = 512,
-      buckets: Int = 1024): DataFrame =
-    packSequencesFromCounts(
-      TextAnalysis.unigramApply(spark, sfDir, vocabSize)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      seqLen, buckets) // not pinned — the C49 revert note above
-
-  /** C49b over arbitrary docs + a fitted table (the spec entry). */
-  def packSequencesUnigramOf(docs: DataFrame, logp: Map[String, Double],
-      maxPieceLen: Int, seqLen: Int = 2048, buckets: Int = 1024): DataFrame =
-    packSequencesFromCounts(
-      TextAnalysis.unigramApplyOf(docs, logp, maxPieceLen)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      seqLen, buckets)
 
   // ------------------------------------------------------------- C43
   /** PACK-LAYOUT audit — the observability row for C13's
@@ -1479,7 +1415,7 @@ object Curation {
     * engines. */
   def packDocAware(docs: DataFrame, seqLen: Int = 2048, g: Int = 64,
       buckets: Int = 1024): DataFrame =
-    // pinned narrow counts (the packSequences rule)
+    // pinned narrow counts (the [[Denomination]] pin rule)
     packDocAwareFromCounts(Scale.fanOutScanLight(docs).select(col("doc_id"),
       size(TextAnalysis.tokens()).cast("long").as("n_tokens"))
       .localCheckpoint(true),
@@ -1573,12 +1509,19 @@ object Curation {
     * ingestion order (`doc_id`); for an unbiased draw, pre-compute a
     * hash column (`xxhash64(doc_id)`) and pass it as `orderCol` —
     * [[sampleStratified]] is the rate-based cousin when the target is
-    * a fraction, not a token count. */
+    * a fraction, not a token count.
+    *
+    * `denomination` states the budgets in the tokenizer's pieces
+    * (C55/C55b — "N billion tokens of web" means pieces; whitespace
+    * budgeting over-admits the OOV-heavy docs a subword tokenizer
+    * fragments most). The result is `docs` without its text, plus
+    * `n_tokens`; a piece denomination pins every other column of
+    * `docs`, so narrow it to what you read first. */
   def mixSample(docs: DataFrame, stratumCol: String,
       budgets: Map[String, Long], defaultBudget: Long,
-      orderCol: String = "doc_id"): DataFrame =
-    mixSampleFromCounts(
-      docs.withColumn("n_tokens", size(TextAnalysis.tokens()).cast("long")),
+      orderCol: String = "doc_id",
+      denomination: Denomination = Denomination.Words): DataFrame =
+    mixSampleFromCounts(Denomination.attach(docs, denomination),
       stratumCol, budgets, defaultBudget, orderCol)
 
   /** [[mixSample]] over a frame that already carries `n_tokens` — the
@@ -1598,109 +1541,17 @@ object Curation {
   }
 
   /** Driver query: 500-token budget for src1, uncapped src0, 800 for
-    * everyone else — exercises override, default, and pass-through. */
-  def mixSampleQuery(spark: SparkSession, sfDir: String): DataFrame =
-    mixSample(Tables.documents(spark, sfDir), "source",
-      Map("src0" -> 1000000L, "src1" -> 500L), defaultBudget = 800L)
+    * everyone else — exercises override, default, and pass-through;
+    * the piece slots read the same panel in their denomination, the
+    * side-by-side a mix owner reads to see the admission shift. */
+  def mixSampleQuery(spark: SparkSession, sfDir: String,
+      denomination: Denomination = Denomination.Words): DataFrame =
+    mixSample(Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"), col("text")),
+      "source", Map("src0" -> 1000000L, "src1" -> 500L),
+      defaultBudget = 800L, denomination = denomination)
       .select(col("doc_id"), col("lang"), col("source"), col("n_tokens"))
       .orderBy(col("doc_id"))
-
-  // ------------------------------------------------------------- C55
-  /** BPE-PIECE training mix — C14's budget knob denominated in the
-    * unit a training-mix spec actually states ("N billion TOKENS of
-    * web" means tokenizer pieces, not whitespace words): the same
-    * [[mixSampleFromCounts]] kernel fed E27's learned-tokenizer piece
-    * counts instead of `size(tokens())`. The divergence is C49's,
-    * applied to ADMISSION instead of layout: whitespace budgeting
-    * over-admits exactly the OOV/rare-word-heavy docs a subword
-    * tokenizer fragments most, so a whitespace-budgeted mix overshoots
-    * its real piece budget by each stratum's pieces-per-token factor.
-    * Scale shape unchanged from C14 — the piece counts are one corpus
-    * scan + one vocab join (E27, cached per corpus version), then the
-    * C18 prefix-sum kernel; the stratum metadata join is doc-keyed.
-    * Rows-only: the learned merge list is the BPE train loop's output
-    * (E26's reason); the spec pins the whitespace-vs-piece admission
-    * divergence on a planted OOV doc. */
-  def mixSampleBpe(spark: SparkSession, sfDir: String,
-      stratumCol: String, budgets: Map[String, Long],
-      defaultBudget: Long, nMerges: Int = 30,
-      orderCol: String = "doc_id"): DataFrame =
-    mixSampleBpeOf(Tables.documents(spark, sfDir),
-      TextAnalysis.bpeApply(spark, sfDir, nMerges),
-      stratumCol, budgets, defaultBudget, orderCol)
-
-  /** C55 over arbitrary docs + a precomputed piece frame (doc_id,
-    * bpe_pieces) — the spec entry (hand vocab → hand-checkable
-    * admission). */
-  def mixSampleBpeOf(docs: DataFrame, pieces: DataFrame,
-      stratumCol: String, budgets: Map[String, Long],
-      defaultBudget: Long, orderCol: String = "doc_id"): DataFrame =
-    mixSamplePieceCounts(docs,
-      pieces.select(col("doc_id"), col("bpe_pieces").as("n_tokens")),
-      stratumCol, budgets, defaultBudget, orderCol)
-
-  /** Driver query: C14's exact budget panel, denominated in pieces —
-    * the side-by-side a mix owner reads to see the admission shift. */
-  def mixSampleBpeQuery(spark: SparkSession, sfDir: String): DataFrame =
-    mixSampleBpe(spark, sfDir, "source",
-      Map("src0" -> 1000000L, "src1" -> 500L), defaultBudget = 800L)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_tokens"))
-      .orderBy(col("doc_id"))
-
-  // ------------------------------------------------------------- C55b
-  /** UNIGRAM-PIECE training mix — C55 with the tokenizer swapped:
-    * E32b's fitted unigram piece counts through the SAME
-    * [[mixSampleFromCounts]] kernel. C49b proved the tokenizer seam
-    * for PACKING; this (with C56b/C57b) completes the swap-proof for
-    * ADMISSION — the r11 verdict's gap: a lab that picks unigram in
-    * the E33 bake-off states its mix budgets in unigram pieces the
-    * same day, with zero new kernels. Rows-only (the fitted table is
-    * EM output — E26's reason); the spec pins the BPE-vs-unigram
-    * admission shift on a doc whose piece economics differ between
-    * the two tokenizers. */
-  def mixSampleUnigram(spark: SparkSession, sfDir: String,
-      stratumCol: String, budgets: Map[String, Long],
-      defaultBudget: Long, vocabSize: Int = 512,
-      orderCol: String = "doc_id"): DataFrame =
-    mixSamplePieceCounts(Tables.documents(spark, sfDir),
-      TextAnalysis.unigramApply(spark, sfDir, vocabSize)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      stratumCol, budgets, defaultBudget, orderCol)
-
-  /** C55b over arbitrary docs + a hand-fitted table (the spec entry —
-    * the C49b pattern: a hand table makes admission hand-checkable). */
-  def mixSampleUnigramOf(docs: DataFrame, logp: Map[String, Double],
-      maxPieceLen: Int, stratumCol: String, budgets: Map[String, Long],
-      defaultBudget: Long, orderCol: String = "doc_id"): DataFrame =
-    mixSamplePieceCounts(docs,
-      TextAnalysis.unigramApplyOf(docs, logp, maxPieceLen)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      stratumCol, budgets, defaultBudget, orderCol)
-
-  def mixSampleUnigramQuery(spark: SparkSession, sfDir: String): DataFrame =
-    mixSampleUnigram(spark, sfDir, "source",
-      Map("src0" -> 1000000L, "src1" -> 500L), defaultBudget = 800L)
-      .select(col("doc_id"), col("lang"), col("source"), col("n_tokens"))
-      .orderBy(col("doc_id"))
-
-  /** The shared admission seam all piece denominations feed: stratum
-    * metadata doc-keyed onto a precomputed (doc_id, n_tokens) count
-    * frame, then the C14 prefix-sum kernel. ONE definition so the BPE
-    * and unigram mixes cannot drift. */
-  private def mixSamplePieceCounts(docs: DataFrame, counts: DataFrame,
-      stratumCol: String, budgets: Map[String, Long],
-      defaultBudget: Long, orderCol: String): DataFrame =
-    // PINNED: the prefix-sum kernel's subtotal job and its output pass
-    // each execute their input's lineage, and here that lineage is the
-    // whole E27/E32b piece computation (tokenize + explode + vocab
-    // join + agg — a multi-exchange subtree), measured running TWICE
-    // per invocation (r17). Pinned rows are four narrow scalars per
-    // doc — no text crosses the pin (the curateFull kept-pin class).
-    mixSampleFromCounts(
-      docs.select(col("doc_id"), col("lang"), col(stratumCol))
-        .join(counts, Seq("doc_id"))
-        .localCheckpoint(true),
-      stratumCol, budgets, defaultBudget, orderCol)
 
   val mixSampleSql: String =
     """WITH t AS (
@@ -2173,71 +2024,27 @@ object Curation {
       |ORDER BY source, doc_id""".stripMargin
 
   // ------------------------------------------------------------- C57
-  /** BPE-PIECE domain cap — C25's re-balance knob denominated in
-    * pieces: instead of "at most k DOCS per domain", keep each
-    * domain's unbiased (seeded-LCG-ordered) subsample until a PIECE
-    * budget is spent — the form the knob takes when what you are
-    * protecting is the training-token mix, not the doc count (domains
-    * differ wildly in doc length, so a doc-count cap still lets a
-    * long-doc domain dominate the token stream). Composition, no new
-    * kernel: C25's unbiased order (the LCG key) as the admission
-    * ORDER, C14's [[mixSampleFromCounts]] prefix-sum budget as the
-    * cut, C49's piece counts as the DENOMINATION. Scale shape is
-    * C14's (bucketed prefix sum, no per-domain single-task sort);
-    * the LCG key is map-side arithmetic. Rows-only (E26's reason);
-    * the spec pins hand-computed admission under a hand vocab and the
-    * doc-count-vs-piece divergence. */
-  def domainCapBpe(spark: SparkSession, sfDir: String,
-      domainCol: String = "source", budgetPieces: Long = 600L,
-      nMerges: Int = 30, seed: Long = 11L): DataFrame =
-    domainCapBpeOf(Tables.documents(spark, sfDir),
-      TextAnalysis.bpeApply(spark, sfDir, nMerges),
-      domainCol, budgetPieces, seed)
-
-  /** C57 over arbitrary docs + a precomputed piece frame — the spec
-    * entry. */
-  def domainCapBpeOf(docs: DataFrame, pieces: DataFrame,
-      domainCol: String, budgetPieces: Long, seed: Long = 11L): DataFrame =
-    domainCapPieceCounts(docs,
-      pieces.select(col("doc_id"), col("bpe_pieces").as("n_tokens")),
-      domainCol, budgetPieces, seed)
-
-  // ------------------------------------------------------------- C57b
-  /** UNIGRAM-PIECE domain cap — C57 with the tokenizer swapped (E32b
-    * counts through the same LCG-ordered per-domain prefix sum); the
-    * last admission kernel of the C55b/C56b/C57b swap-proof trio.
-    * Rows-only (E26's reason); spec pins hand-computed admission
-    * under a hand-fitted table. */
-  def domainCapUnigram(spark: SparkSession, sfDir: String,
-      domainCol: String = "source", budgetPieces: Long = 600L,
-      vocabSize: Int = 512, seed: Long = 11L): DataFrame =
-    domainCapPieceCounts(Tables.documents(spark, sfDir),
-      TextAnalysis.unigramApply(spark, sfDir, vocabSize)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      domainCol, budgetPieces, seed)
-
-  /** C57b over arbitrary docs + a hand-fitted table (the spec entry). */
-  def domainCapUnigramOf(docs: DataFrame, logp: Map[String, Double],
-      maxPieceLen: Int, domainCol: String, budgetPieces: Long,
-      seed: Long = 11L): DataFrame =
-    domainCapPieceCounts(docs,
-      TextAnalysis.unigramApplyOf(docs, logp, maxPieceLen)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      domainCol, budgetPieces, seed)
-
-  /** The shared per-domain piece-budget seam — ONE definition so the
-    * BPE and unigram caps cannot drift. */
-  private def domainCapPieceCounts(docs: DataFrame, counts: DataFrame,
-      domainCol: String, budgetPieces: Long, seed: Long): DataFrame =
-    // pinned for the mixSamplePieceCounts reason — the piece subtree
-    // otherwise runs once per kernel pass; rows are narrow scalars
-    mixSampleFromCounts(
-      docs.select(col("doc_id"), col(domainCol))
-        .join(counts, Seq("doc_id"))
-        .withColumn("__dk", shuffleKey(col("doc_id"), seed))
-        .localCheckpoint(true),
-      domainCol, Map.empty, budgetPieces, orderCol = "__dk")
-      .drop("__dk")
+  /** BUDGETED domain cap — C25's re-balance knob stated as a token
+    * budget: instead of "at most k DOCS per domain", keep each
+    * domain's unbiased (seeded-LCG-ordered) subsample until `budget`
+    * tokens of `denomination` are spent — the form the knob takes when
+    * what you are protecting is the training-token mix, not the doc
+    * count (domains differ wildly in doc length, so a doc-count cap
+    * still lets a long-doc domain dominate the token stream; the slots
+    * budget in BPE / unigram pieces, C57/C57b). Composition, no new
+    * kernel: C25's LCG key as the admission ORDER, C14's
+    * [[mixSampleFromCounts]] prefix-sum budget as the cut. Scale shape
+    * is C14's (bucketed prefix sum, no per-domain single-task sort);
+    * the LCG key is map-side arithmetic. */
+  def domainCapBudget(docs: DataFrame, domainCol: String = "source",
+      budget: Long = 600L, seed: Long = 11L,
+      denomination: Denomination = Denomination.Words): DataFrame =
+    mixSampleFromCounts(Denomination.attach(
+        docs.select(col("doc_id"), col(domainCol), col("text"),
+          shuffleKey(col("doc_id"), seed).as("__dk")),
+        denomination),
+      domainCol, Map.empty, budget, orderCol = "__dk")
+      .select(col("doc_id"), col(domainCol), col("n_tokens"))
       .orderBy(col(domainCol), col("doc_id"))
 
   // ------------------------------------------------------------- C27
@@ -2884,9 +2691,16 @@ object Curation {
     * map-side partials + a broadcast prefix base, NO global-sort
     * single-partition window. A doc is kept iff the budget was not
     * exhausted BEFORE it (cum − own < budget): deterministic greedy
-    * prefix, including the one straddling document. */
+    * prefix, including the one straddling document.
+    *
+    * `denomination` fills the budget in tokenizer pieces instead
+    * (C56/C56b): same quality order, one extra doc-keyed join with the
+    * piece counts. Whitespace denomination admits MORE docs than a
+    * piece budget can carry (pieces/token ≥ 1 everywhere), and the
+    * shortfall concentrates on the OOV-heavy tail. */
   def budgetSelect(docs: DataFrame, budgetTokens: Long = 15000,
-      buckets: Int = 1024): DataFrame = {
+      buckets: Int = 1024,
+      denomination: Denomination = Denomination.Words): DataFrame = {
     require(budgetTokens >= 0, s"budget $budgetTokens must be >= 0")
     // Token-free docs (CJK/emoji/punctuation-only or empty) score NULL
     // quality (divide-by-zero → NULL): drop them HERE, explicitly — a
@@ -2894,15 +2708,16 @@ object Curation {
     // while the oracle and the budgetSelectStream twin (quality floor
     // filter) both drop such docs. One explicit filter on both sides
     // keeps the three formulations aligned.
-    // PINNED (the lm_buckets finding): the id-span require plus the
+    // PINNED (the lm_buckets finding) by budgetSelectFromScored, above
+    // the piece join when there is one: the id-span require plus the
     // prefix sum's internal consumers (span agg, bucket subtotals,
     // base join) would each re-run the regex-heavy quality-score tail
     // — 3-4× the E2 cost. Pinned size is three narrow columns per doc.
-    budgetSelectFromScored(
-      TextAnalysis.textQualityOf(docs)
-        .select(col("doc_id"), col("n_tokens"),
-          floor(col("quality_score") * 1e6).cast("long").as("q6"))
-        .filter(col("q6").isNotNull),
+    val scored = TextAnalysis.textQualityOf(docs)
+      .select(col("doc_id"), col("n_tokens"),
+        floor(col("quality_score") * 1e6).cast("long").as("q6"))
+      .filter(col("q6").isNotNull)
+    budgetSelectFromScored(Denomination.rescore(scored, docs, denomination),
       budgetTokens, buckets)
   }
 
@@ -2951,70 +2766,6 @@ object Curation {
 
   def budgetSelectQuery(spark: SparkSession, sfDir: String): DataFrame =
     budgetSelect(Tables.documents(spark, sfDir))
-
-  // ------------------------------------------------------------- C56
-  /** BPE-PIECE budget selection — C28 with the budget denominated in
-    * learned-tokenizer pieces: rank by the same E2 quality composite,
-    * fill the budget by E27's per-doc piece counts. "We can afford N
-    * tokens of pretraining data" means pieces the model will consume;
-    * whitespace denomination admits MORE docs than the budget can
-    * carry (pieces/token ≥ 1 everywhere), and the shortfall
-    * concentrates on the OOV-heavy tail. One extra doc-keyed join vs
-    * C28 (the cached E27 piece frame); the kernel, pinning, and scale
-    * shape are [[budgetSelectFromScored]]'s verbatim. Rows-only: the
-    * learned vocab is train-loop output (E26's reason); the spec pins
-    * the admission divergence on a planted OOV doc. */
-  def budgetSelectBpe(spark: SparkSession, sfDir: String,
-      budgetPieces: Long = 15000, nMerges: Int = 30,
-      buckets: Int = 1024): DataFrame =
-    budgetSelectBpeOf(Tables.documents(spark, sfDir),
-      TextAnalysis.bpeApply(spark, sfDir, nMerges),
-      budgetPieces, buckets)
-
-  /** C56 over arbitrary docs + a precomputed piece frame — the spec
-    * entry (hand vocab → hand-checkable selection). */
-  def budgetSelectBpeOf(docs: DataFrame, pieces: DataFrame,
-      budgetPieces: Long, buckets: Int = 1024): DataFrame =
-    budgetSelectPieceCounts(docs,
-      pieces.select(col("doc_id"), col("bpe_pieces").as("n_tokens")),
-      budgetPieces, buckets)
-
-  // ------------------------------------------------------------- C56b
-  /** UNIGRAM-PIECE budget selection — C56 with the tokenizer swapped
-    * (E32b counts through the same scored prefix-sum), completing the
-    * admission swap-proof alongside C55b/C57b: quality ORDER, budget
-    * DENOMINATION, and now TOKENIZER are three independent knobs.
-    * Rows-only (E26's reason); the spec pins the BPE-vs-unigram
-    * selection shift on a doc the two tokenizers price differently. */
-  def budgetSelectUnigram(spark: SparkSession, sfDir: String,
-      budgetPieces: Long = 15000, vocabSize: Int = 512,
-      buckets: Int = 1024): DataFrame =
-    budgetSelectPieceCounts(Tables.documents(spark, sfDir),
-      TextAnalysis.unigramApply(spark, sfDir, vocabSize)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      budgetPieces, buckets)
-
-  /** C56b over arbitrary docs + a hand-fitted table (the spec entry). */
-  def budgetSelectUnigramOf(docs: DataFrame, logp: Map[String, Double],
-      maxPieceLen: Int, budgetPieces: Long,
-      buckets: Int = 1024): DataFrame =
-    budgetSelectPieceCounts(docs,
-      TextAnalysis.unigramApplyOf(docs, logp, maxPieceLen)
-        .select(col("doc_id"), col("unigram_pieces").as("n_tokens")),
-      budgetPieces, buckets)
-
-  /** The shared scored-selection seam all piece denominations feed —
-    * ONE definition so the BPE and unigram budgets cannot drift. */
-  private def budgetSelectPieceCounts(docs: DataFrame, counts: DataFrame,
-      budgetPieces: Long, buckets: Int): DataFrame =
-    budgetSelectFromScored(
-      TextAnalysis.textQualityOf(docs)
-        .select(col("doc_id"),
-          floor(col("quality_score") * 1e6).cast("long").as("q6"))
-        .filter(col("q6").isNotNull)
-        .join(counts, Seq("doc_id"))
-        .select(col("doc_id"), col("n_tokens"), col("q6")),
-      budgetPieces, buckets)
 
   val budgetSelectSql: String =
     """WITH x AS (
@@ -3480,8 +3231,8 @@ object Curation {
     // narrow projection + pin: only the four output scalars cross the
     // pin (text stays below it, read once by the tokenizer), and the
     // prefix-sum kernel's two passes read pinned blocks instead of
-    // re-tokenizing the corpus per pass (the mixSamplePieceCounts
-    // finding)
+    // re-tokenizing the corpus per pass (the [[Denomination]] pin
+    // rule)
     mixSampleBudgetFrame(
       docs.select(col("doc_id"), col("lang"), col("source"),
           size(TextAnalysis.tokens()).cast("long").as("n_tokens"))
@@ -4068,7 +3819,7 @@ object Curation {
     val spark = docs.sparkSession
     import spark.implicits._
     require(centroids.nonEmpty, "need at least one centroid")
-    // pinned narrow frame (the mixSamplePieceCounts rule): the join +
+    // pinned narrow frame (the [[Denomination]] pin rule): the join +
     // centroid assignment + tokenizer otherwise run once per prefix-
     // kernel pass (probe, subtotal, output — measured 3×)
     val assigned = docs.join(embeds, Seq("doc_id"))

@@ -548,19 +548,16 @@ object Scale {
     * than the rows it would have pruned.
     *
     * MECHANISM CHOICE, measured (r16): the zero-conversion alternative
-    * — [[graft.plans.Fence]], a custom pass-through plan node that
-    * blocks the same rules without the RDD round-trip's two per-row
-    * conversions — LOST the A/B on the curate family at sf0.1: warm
-    * medians (fence vs this) crawl 2.95/2.34, crawl_robust 3.72/2.88,
-    * full 2.23/1.85, gated 2.07/1.87, predicted 1.60/1.44, v2
-    * 0.50/0.45, prod a wash 2.20/2.26; cold far worse (2–3× — the
-    * unified plan pays one giant codegen compile where the RDD
-    * barrier's halves compile separately). The conversions this
-    * mechanism pays are evidently cheaper than what the unified plan
-    * costs in stats-driven re-planning and compile mass, so the RDD
-    * round-trip STAYS. The fence remains in plans/Fence.scala with a
-    * PlanSpec proof of its blocking behavior, for plans where the
-    * trade could run the other way (very wide rows, cheap plans). */
+    * — a custom pass-through plan node that blocks the same rules
+    * without the RDD round-trip's two per-row conversions — LOST the
+    * A/B on the curate family at sf0.1: warm medians (plan node vs
+    * this) crawl 2.95/2.34, crawl_robust 3.72/2.88, full 2.23/1.85,
+    * gated 2.07/1.87, predicted 1.60/1.44, v2 0.50/0.45, prod a wash
+    * 2.20/2.26; cold far worse (2–3× — the unified plan pays one giant
+    * codegen compile where the RDD barrier's halves compile
+    * separately). The conversions this mechanism pays are evidently
+    * cheaper than what the unified plan costs in stats-driven
+    * re-planning and compile mass, so the RDD round-trip STAYS. */
   def evalOnce(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.rdd, df.schema)
 

@@ -2547,7 +2547,7 @@ object TextAnalysis {
   private val bpeCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long, Int), (Seq[(String, String, Long)], DataFrame)]
 
-  private def cachedBpe(spark: SparkSession, sfDir: String,
+  private[operators] def cachedBpe(spark: SparkSession, sfDir: String,
       nMerges: Int): (Seq[(String, String, Long)], DataFrame) = {
     val stamp = graft.Tables.pathStamp(spark, s"$sfDir/documents.parquet")
     bpeCache.filterInPlace { case ((d, st, _), _) => d != sfDir || st == stamp }
@@ -2894,7 +2894,7 @@ object TextAnalysis {
   private val unigramCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long, Int, Int, Int, Int), Map[String, Double]]
 
-  private def cachedUnigram(spark: SparkSession, sfDir: String,
+  private[operators] def cachedUnigram(spark: SparkSession, sfDir: String,
       vocabSize: Int, maxPieceLen: Int, seedSize: Int,
       emRounds: Int): Map[String, Double] = {
     val stamp = Tables.pathStamp(spark, s"$sfDir/documents.parquet")

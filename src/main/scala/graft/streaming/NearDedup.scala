@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, 
   * is a near-duplicate iff ANY of its four buckets holds a
   * Hamming-≤ 3 signature from the watermark horizon. Same shape as the
   * batch bucket join, with the bucket turned into keyed state
-  * (the [[HealthMonitorV2]] transformWithState pattern).
+  * (Spark 4's transformWithState: typed `ValueState`, event-time timers).
   *
   * Scale/state bounds: state is per (chunk, value) bucket — 4 sig rows
   * of ~16 bytes per doc in the horizon, NOT per corpus. Eviction is

@@ -34,7 +34,7 @@ case class RegistrySeed(user_id: Long, registered_us: Long)
   *
   * Scale: one ValueState row + one timer per registered device —
   * O(fleet), the store IS the registry; RocksDB provider required
-  * (see [[HealthMonitorV2]]).
+  * (transformWithState runs only on the RocksDB state store).
   */
 class RegistryHeartbeatProcessor(maxGapUs: Long)
     extends StatefulProcessorWithInitialState[Long, DeviceEvent, SilenceAlert, RegistrySeed] {

@@ -61,6 +61,13 @@ object UpsertSink {
     try {
       val touched = deduped.select($"bucket").distinct()
         .as[Long].collect().toSet // bounded by nBuckets
+      if (touched.isEmpty) {
+        // an empty batch changes no bucket: writing it anyway would
+        // leave a fresh snapshot a `data/` dir with no parquet file,
+        // and the next batch's read could not infer a schema
+        writeMarker(fs, marker)
+        return
+      }
       val checkpointed =
         if (fs.exists(new Path(dataDir))) {
           // partition filter prunes the scan to touched buckets only
@@ -86,11 +93,16 @@ object UpsertSink {
           .option("partitionOverwriteMode", "dynamic") // replace ONLY
           .partitionBy("bucket")                       // touched buckets
           .parquet(dataDir)
-        fs.mkdirs(marker.getParent)
-        fs.create(marker, true).close()
+        writeMarker(fs, marker)
       } finally checkpointed.foreach(graft.Tables.unpinCheckpoint)
     } finally deduped.unpersist()
     ()
+  }
+
+  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
+      marker: Path): Unit = {
+    fs.mkdirs(marker.getParent)
+    fs.create(marker, true).close()
   }
 
   /** Attach the upsert sink to an update stream. Returns the started

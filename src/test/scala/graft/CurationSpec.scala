@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, TextAnalysis}
+import graft.operators.{Curation, Dedup, Denomination, TextAnalysis}
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
@@ -706,8 +706,8 @@ class CurationSpec extends SparkSpec {
     val docs = Seq((0L, "aa bb"), (1L, "cc"), (2L, "aa aa aa"))
       .toDF("doc_id", "text")
     // piece counts: d0 = 1+2 = 3, d1 = 2, d2 = 3; cum-before 0, 3, 5
-    val bpe = Curation.packSequencesBpeOf(docs, vocab, seqLen = 4,
-      buckets = 3).collect()
+    val bpe = Curation.packSequences(docs, seqLen = 4, buckets = 3,
+      denomination = Denomination.BpePieces(vocab)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(bpe.toSeq === Seq((0L, 3L, 0L, 0L), (1L, 2L, 0L, 3L),
       (2L, 3L, 1L, 1L)), s"piece packing wrong: ${bpe.toSeq}")
@@ -723,8 +723,9 @@ class CurationSpec extends SparkSpec {
       "planted corpus failed to separate the two budgets")
     // the sf driver query: same invariants as C13 — contiguous global
     // positions in the PIECE stream
-    val out = Curation.packSequencesBpe(spark, sf, seqLen = 64,
-      buckets = 7).collect()
+    val out = Curation.packSequences(Tables.documents(spark, sf),
+      seqLen = 64, buckets = 7,
+      denomination = Denomination.bpe(spark, sf)).collect()
     assert(out.nonEmpty)
     var cum = 0L
     out.foreach { r =>
@@ -1358,8 +1359,9 @@ class CurationSpec extends SparkSpec {
     val docs = Seq((0L, "abab c"), (1L, "abab abab"), (2L, "c"))
       .toDF("doc_id", "text")
     // piece counts: d0 = 2+1 = 3, d1 = 4, d2 = 1; cum-before 0, 3, 7
-    val out = Curation.packSequencesUnigramOf(docs, logp,
-      maxPieceLen = 2, seqLen = 4, buckets = 2).collect()
+    val out = Curation.packSequences(docs, seqLen = 4, buckets = 2,
+      denomination = Denomination.UnigramPieces(logp, maxPieceLen = 2))
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq === Seq((0L, 3L, 0L, 0L), (1L, 4L, 0L, 3L),
       (2L, 1L, 1L, 3L)), s"unigram packing wrong: ${out.toSeq}")
@@ -1369,7 +1371,8 @@ class CurationSpec extends SparkSpec {
     assert(out.map(t => (t._1, t._3, t._4)).toSet != ws.toSet,
       "planted corpus failed to separate the two budgets")
     // driver query: contiguous positions in the unigram piece stream
-    val drv = Curation.packSequencesUnigram(spark, sf, seqLen = 64)
+    val drv = Curation.packSequences(Tables.documents(spark, sf),
+      seqLen = 64, denomination = Denomination.unigram(spark, sf))
       .collect()
     assert(drv.nonEmpty)
     var cum = 0L
@@ -1389,7 +1392,6 @@ class CurationSpec extends SparkSpec {
       (2L, "en", "srcA", "aa"),          // ws 1, pieces 1
       (3L, "en", "srcB", "cc"),          // ws 1, pieces 2
     ).toDF("doc_id", "lang", "source", "text")
-    val pieces = TextAnalysis.bpeApplyOf(docs, vocab)
     val budgets = Map("srcA" -> 5L)
     // whitespace admission (cum ≤ 5 in doc_id order): 2, 5, 6 → {0, 1}
     val ws = Curation.mixSample(docs, "source", budgets, defaultBudget = 2L)
@@ -1397,11 +1399,12 @@ class CurationSpec extends SparkSpec {
     assert(ws === Set(0L, 1L, 3L), s"whitespace admission drifted: $ws")
     // piece admission: 2, 8, 9 → the OOV doc blows the same budget and
     // everything behind it in the greedy prefix stays out too
-    val bpe = Curation.mixSampleBpeOf(docs, pieces, "source", budgets,
-      defaultBudget = 2L).collect().map(_.getLong(0)).toSet
+    val bpe = Curation.mixSample(docs, "source", budgets,
+      defaultBudget = 2L, denomination = Denomination.BpePieces(vocab))
+      .collect().map(_.getLong(0)).toSet
     assert(bpe === Set(0L, 3L), s"piece admission wrong: $bpe")
     // driver query: non-empty, and per-source piece mass inside budget
-    val out = Curation.mixSampleBpeQuery(spark, sf)
+    val out = Curation.mixSampleQuery(spark, sf, Denomination.bpe(spark, sf))
     assert(out.count() > 0)
     val perSrc = out.groupBy($"source")
       .agg(org.apache.spark.sql.functions.sum($"n_tokens").as("m"))
@@ -1423,19 +1426,20 @@ class CurationSpec extends SparkSpec {
       (1L, "cc cc cc cc"),  // 4 ws, 8 pieces — OOV
       (2L, "aa aa aa aa"),  // 4 ws, 4 pieces
     ).toDF("doc_id", "text")
-    val pieces = TextAnalysis.bpeApplyOf(docs, vocab)
     val ws = Curation.budgetSelect(docs, budgetTokens = 10, buckets = 2)
       .collect().map(_.getLong(0)).toSet
     assert(ws === Set(0L, 1L, 2L), s"whitespace selection drifted: $ws")
     // pieces cum: 4, 12, 16 — doc 1 straddles (cum_before 4 < 10 →
     // kept, the C28 boundary rule), doc 2 sees cum_before 12 → out
-    val bpe = Curation.budgetSelectBpeOf(docs, pieces, budgetPieces = 10,
-      buckets = 2).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val bpe = Curation.budgetSelect(docs, budgetTokens = 10, buckets = 2,
+      denomination = Denomination.BpePieces(vocab)).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
     assert(bpe.map(_._1).toSet === Set(0L, 1L), s"piece selection: ${bpe.toSeq}")
     assert(bpe.toMap === Map(0L -> 4L, 1L -> 8L),
       s"piece counts wrong: ${bpe.toSeq}")
     // driver query: non-empty, piece mass before the last doc < budget
-    val out = Curation.budgetSelectBpe(spark, sf).collect()
+    val out = Curation.budgetSelect(Tables.documents(spark, sf),
+      denomination = Denomination.bpe(spark, sf)).collect()
     assert(out.nonEmpty)
     out.foreach(r => assert(r.getLong(3) - r.getLong(1) < 15000L,
       s"doc ${r.getLong(0)} admitted after the piece budget closed"))
@@ -1449,7 +1453,6 @@ class CurationSpec extends SparkSpec {
       (12L, "x", "cc cc"),    // 4 pieces
       (20L, "y", "aa aa"),    // 2 pieces
     ).toDF("doc_id", "source", "text").withColumn("lang", lit("en"))
-    val pieces = TextAnalysis.bpeApplyOf(docs, vocab)
     val pieceOf = Map(10L -> 1L, 11L -> 2L, 12L -> 4L, 20L -> 2L)
     // independent simulation: the admission order is the seeded LCG
     // key order (C25's), the cut is the greedy piece prefix (C14's)
@@ -1464,8 +1467,9 @@ class CurationSpec extends SparkSpec {
         if (cum <= 2L) Some(id) else None
       }
     }.toSet
-    val got = Curation.domainCapBpeOf(docs, pieces, "source",
-      budgetPieces = 2L, seed = 11L).collect().map(_.getLong(0)).toSet
+    val got = Curation.domainCapBudget(docs, "source", budget = 2L,
+      seed = 11L, denomination = Denomination.BpePieces(vocab))
+      .collect().map(_.getLong(0)).toSet
     assert(got === expected, s"got $got, simulated $expected")
     // per-domain piece mass never exceeds the budget…
     Seq("x", "y").foreach { d =>
@@ -1479,7 +1483,8 @@ class CurationSpec extends SparkSpec {
       .collect().map(r => r.getLong(0)).toSet
     assert(docCap !== got, s"doc-count cap $docCap == piece cap $got")
     // driver query: non-empty, per-domain piece mass within budget
-    val out = Curation.domainCapBpe(spark, sf)
+    val out = Curation.domainCapBudget(Tables.documents(spark, sf),
+      denomination = Denomination.bpe(spark, sf))
     assert(out.count() > 0)
     val perDom = out.groupBy($"source")
       .agg(org.apache.spark.sql.functions.sum($"n_tokens").as("m"))
@@ -1502,12 +1507,13 @@ class CurationSpec extends SparkSpec {
       (1L, "en", "srcA", "cc cc"),   // bpe 4, uni 2
       (2L, "en", "srcA", "aa aa"),   // bpe 2, uni 4
     ).toDF("doc_id", "lang", "source", "text")
-    val bpeMix = Curation.mixSampleBpeOf(mixDocs,
-      TextAnalysis.bpeApplyOf(mixDocs, vocab), "source",
-      Map("srcA" -> 4L), defaultBudget = 0L)
+    val bpeMix = Curation.mixSample(mixDocs, "source",
+      Map("srcA" -> 4L), defaultBudget = 0L,
+      denomination = Denomination.BpePieces(vocab))
       .collect().map(_.getLong(0)).toSet
-    val uniMix = Curation.mixSampleUnigramOf(mixDocs, logp,
-      maxPieceLen = 2, "source", Map("srcA" -> 4L), defaultBudget = 0L)
+    val uniMix = Curation.mixSample(mixDocs, "source",
+      Map("srcA" -> 4L), defaultBudget = 0L,
+      denomination = Denomination.UnigramPieces(logp, maxPieceLen = 2))
       .collect().map(_.getLong(0)).toSet
     assert(bpeMix === Set(0L), s"bpe mix admission: $bpeMix")
     // unigram cums 2, 4, 8: the unigram-cheap OOV doc is IN
@@ -1519,11 +1525,12 @@ class CurationSpec extends SparkSpec {
       (1L, "cc cc cc"),   // bpe 6, uni 3
       (2L, "aa aa aa"),   // bpe 3, uni 6
     ).toDF("doc_id", "text")
-    val bpeSel = Curation.budgetSelectBpeOf(selDocs,
-      TextAnalysis.bpeApplyOf(selDocs, vocab), budgetPieces = 4,
-      buckets = 2).collect().map(_.getLong(0)).toSet
-    val uniSel = Curation.budgetSelectUnigramOf(selDocs, logp,
-      maxPieceLen = 2, budgetPieces = 4, buckets = 2)
+    val bpeSel = Curation.budgetSelect(selDocs, budgetTokens = 4,
+      buckets = 2, denomination = Denomination.BpePieces(vocab))
+      .collect().map(_.getLong(0)).toSet
+    val uniSel = Curation.budgetSelect(selDocs, budgetTokens = 4,
+      buckets = 2,
+      denomination = Denomination.UnigramPieces(logp, maxPieceLen = 2))
       .collect().map(_.getLong(0)).toSet
     assert(bpeSel === Set(0L, 1L), s"bpe selection: $bpeSel")
     assert(uniSel === Set(0L), s"unigram selection: $uniSel")
@@ -1546,12 +1553,14 @@ class CurationSpec extends SparkSpec {
         if (cum <= 3L) Some(id) else None
       }
     }.toSet
-    val gotCap = Curation.domainCapUnigramOf(capDocs, logp,
-      maxPieceLen = 2, "source", budgetPieces = 3L, seed = 11L)
+    val gotCap = Curation.domainCapBudget(capDocs, "source", budget = 3L,
+      seed = 11L,
+      denomination = Denomination.UnigramPieces(logp, maxPieceLen = 2))
       .collect().map(_.getLong(0)).toSet
     assert(gotCap === expected, s"got $gotCap, simulated $expected")
     // --- driver queries: non-empty, budgets hold in UNIGRAM pieces
-    val mq = Curation.mixSampleUnigramQuery(spark, sf)
+    val mq = Curation.mixSampleQuery(spark, sf,
+      Denomination.unigram(spark, sf))
     assert(mq.count() > 0)
     mq.groupBy($"source")
       .agg(org.apache.spark.sql.functions.sum($"n_tokens").as("m"))
@@ -1561,11 +1570,13 @@ class CurationSpec extends SparkSpec {
         assert(r.getLong(1) <= cap,
           s"source ${r.getString(0)} mass ${r.getLong(1)} over $cap")
       }
-    val bq = Curation.budgetSelectUnigram(spark, sf).collect()
+    val bq = Curation.budgetSelect(Tables.documents(spark, sf),
+      denomination = Denomination.unigram(spark, sf)).collect()
     assert(bq.nonEmpty)
     bq.foreach(r => assert(r.getLong(3) - r.getLong(1) < 15000L,
       s"doc ${r.getLong(0)} admitted after the unigram budget closed"))
-    val dq = Curation.domainCapUnigram(spark, sf)
+    val dq = Curation.domainCapBudget(Tables.documents(spark, sf),
+      denomination = Denomination.unigram(spark, sf))
     assert(dq.count() > 0)
     dq.groupBy($"source")
       .agg(org.apache.spark.sql.functions.sum($"n_tokens").as("m"))

@@ -125,31 +125,6 @@ class StreamingSpec extends SparkSpec {
     assert(a.head.consec_fails === 3)
   }
 
-  test("transformWithState monitor (v2) matches the flatMapGroupsWithState ladder") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val input = MemoryStream[DeviceEvent](6, spark, None)
-      val q = graft.streaming.HealthMonitorV2.monitor(input.toDS())
-        .writeStream.format("memory").queryName("alerts_v2")
-        .outputMode("append").start()
-      try {
-        input.addData(ev(1, 1, 8L, "error"), ev(2, 2, 8L, "error"))
-        q.processAllAvailable()
-        assert(spark.table("alerts_v2").count() === 0) // state carries, no alert yet
-        input.addData(ev(3, 3, 8L, "error"), ev(4, 4, 8L, "purchase"))
-        q.processAllAvailable()
-        val a = spark.table("alerts_v2").orderBy($"ts").as[HealthAlertRow].collect()
-        assert(a.map(_.action).toSeq === Seq(
-          HealthMonitor.SERVICE_RESTART, HealthMonitor.RECOVERED))
-      } finally q.stop()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming dedup drops replayed event ids across micro-batches") {
     val input = MemoryStream[DeviceEvent](5, spark, None)
     val q = StreamingAggs.dedupEvents(input.toDF())

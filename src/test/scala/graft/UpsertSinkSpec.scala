@@ -29,6 +29,19 @@ class UpsertSinkSpec extends SparkSpec {
       4L -> ("four", 20L), 5L -> ("five-new", 2L)))
   }
 
+  test("empty first batch into a fresh snapshot: the next batch still applies") {
+    val dir = tmp("graft-upsert")
+    val empty = Seq.empty[(Long, String, Long)].toDF("doc_id", "text", "ver")
+    UpsertSink.applyBatch(empty, 0L, dir, "doc_id", "ver", nBuckets = 8)
+    val b1 = Seq((1L, "one", 10L), (2L, "two", 10L))
+      .toDF("doc_id", "text", "ver")
+    UpsertSink.applyBatch(b1, 1L, dir, "doc_id", "ver", nBuckets = 8)
+    assert(snap(dir) === Map(1L -> ("one", 10L), 2L -> ("two", 10L)))
+    // the empty batch is still recorded: its replay short-circuits
+    UpsertSink.applyBatch(empty, 0L, dir, "doc_id", "ver", nBuckets = 8)
+    assert(snap(dir) === Map(1L -> ("one", 10L), 2L -> ("two", 10L)))
+  }
+
   test("replayed batch id is a no-op; untouched buckets are not rewritten") {
     val dir = tmp("graft-upsert")
     val many = (0L until 64L).map(i => (i, s"v$i", 1L))

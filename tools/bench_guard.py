@@ -9,8 +9,11 @@ quoted a number not present in the file it named drifted from the
 artifact. This guard mechanizes both lessons' first half: a bench
 artifact is quotable in a close ONLY if the machine was idle when it
 started (default ceiling 1.5 on load_avg_start, against 32 CPUs).
-Exit 0 = quotable; exit 1 = re-run on an idle machine. The second
-half stays manual: quote numbers only from the file the close names.
+It also refuses an artifact with a failed slot (`failed_count` > 0,
+or any slot timed at -1): the total leaves failed slots out, so such
+a file reads smaller, not healthier.
+Exit 0 = quotable; exit 1 = re-run. The second half stays manual:
+quote numbers only from the file the close names.
 """
 import json
 import sys
@@ -23,6 +26,11 @@ def main() -> int:
     path = sys.argv[1]
     ceiling = float(sys.argv[2]) if len(sys.argv) > 2 else 1.5
     d = json.load(open(path))
+    failed = sorted(k for k, v in d.get("queries", {}).items() if v < 0)
+    if d.get("failed_count", 0) > 0 or failed:
+        print(f"REFUSE {path}: failed_count {d.get('failed_count')}, "
+              f"failed slots {failed} — the total omits them; fix and re-run")
+        return 1
     load = d.get("load_avg_start")
     if load is None:
         print(f"REFUSE {path}: no load_avg_start field — artifact "
